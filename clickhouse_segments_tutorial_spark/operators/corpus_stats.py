@@ -404,18 +404,17 @@ def ngram_novelty(
     )
 
 
-def _doc_gram_arrays(
+def doc_gram_keys(
     docs: DataFrame,
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
 ) -> DataFrame:
-    """(doc_id, _ga): each doc's DISTINCT raw n-gram shingle strings as
-    one array column — the shared gram builder of :func:`doc_gram_keys`
-    (which explodes it and md5-keys the rows) and the batch novelty's
-    map-only per-doc gram count (``size(_ga)`` — md5 is per-row, so the
-    exploded row count always equals this size)."""
+    """(doc_id, _g): every DISTINCT n-gram shingle per doc as a full-width
+    md5 key (dedup shingle convention: empty doc -> none, len < n -> one
+    whole-doc gram). Shared by the batch and incremental novelty paths so
+    the two cannot drift."""
     toks = docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("_t"))
     cnt = F.size("_t")
     whole = F.array(F.concat_ws(" ", F.col("_t")))
@@ -428,22 +427,8 @@ def _doc_gram_arrays(
         .when(cnt < n, whole)
         .otherwise(many)
     )
-    return toks.select("doc_id", F.array_distinct(grams).alias("_ga"))
-
-
-def doc_gram_keys(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """(doc_id, _g): every DISTINCT n-gram shingle per doc as a full-width
-    md5 key (dedup shingle convention: empty doc -> none, len < n -> one
-    whole-doc gram). Shared by the batch and incremental novelty paths so
-    the two cannot drift."""
     return select_exploded(
-        _doc_gram_arrays(docs, text_col=text_col, id_col=id_col, n=n),
+        toks.select("doc_id", F.array_distinct(grams).alias("_ga")),
         "doc_id",
         arr=F.col("_ga"),
         alias="_g"

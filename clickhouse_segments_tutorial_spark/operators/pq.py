@@ -41,6 +41,8 @@ Scale design (100 TB / billions of vectors):
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
@@ -166,7 +168,17 @@ def _dec_array_lit(vals: list[float]) -> Column:
     driver-side query-BUILD time (the r18 probe regression). The
     double literal (repr round-trips exactly) cast element-wise to
     decimal(18,6) is the identical Cast the per-element form produced,
-    so every score stays bit-identical."""
+    so every score stays bit-identical.
+
+    Non-finite entries (from a NaN/inf codebook, centroid or probe
+    component) are refused: ``repr`` would emit ``infD``/``nanD``, which
+    is not SQL and fails the build with a ParseException."""
+    bad = [v for v in vals if not math.isfinite(v)]
+    if bad:
+        raise ValueError(
+            f"non-finite codebook or probe entry in the ADC table: {bad[0]!r} "
+            "(check the codebooks, centroids and probe vector for NaN/inf)"
+        )
     body = ", ".join(repr(float(v)) + "D" for v in vals)
     return F.expr(f"CAST(array({body}) AS ARRAY<DECIMAL(18,6)>)")
 

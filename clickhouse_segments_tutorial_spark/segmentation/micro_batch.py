@@ -36,10 +36,10 @@ import datetime as dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.errors import AnalysisException
 
 from .spec import EventLog, SegmentSpec
 from ..operators.hll_state import accumulate_state, hll_merge, hll_merge_estimate
+from ..sources.catalog import read_parquet
 from ..sources.writers import (
     PARTITION_COL,
     append_clustered,
@@ -112,17 +112,12 @@ class MicroBatchSegmenter:
         # than mistaking an interrupted swap for an empty table (which
         # would silently rebuild state from nothing)
         recover_rewrite(path)
-        if not os.path.exists(path):
-            return None
-        try:
-            return self.spark.read.parquet(path)
-        except AnalysisException:
-            # Directory exists but holds no data files (e.g. every partition
-            # aged out via retention, or only empty-batch markers) — treat as
-            # an empty table. Real I/O errors (corrupt footer, permissions)
-            # are NOT caught: a silent empty-table there would complete the
-            # batch while dropping finalization for its users.
-            return None
+        # None for a missing path or a directory with no data files (every
+        # partition aged out via retention, or only empty-batch markers) —
+        # an empty table. Real I/O errors (corrupt footer, permissions)
+        # raise: a silent empty-table there would complete the batch while
+        # dropping finalization for its users.
+        return read_parquet(self.spark, path)
 
     def states(self) -> DataFrame | None:
         return self._read(self.states_path)
@@ -157,7 +152,18 @@ class MicroBatchSegmenter:
         append_clustered(df, self.assignments_path, cluster_by=["user_id"])
 
     def process_batch(self, events: DataFrame, lower_bound, now) -> None:
-        """Run one micro-batch: state update + changelog + finalize."""
+        """Run one micro-batch: state update + changelog + finalize.
+
+        Retry contract: after ANY failure, replay the whole batch (same
+        events, lower_bound and now). The three writes are not one
+        transaction — the states append may have committed, and because
+        finalize runs concurrently with the changelog append, assignments
+        may commit while the changelog does not, leaving rows that
+        ``finalize_pending`` cannot see. A replay appends the batch's
+        state rows a second time, which is value-safe only for idempotent
+        merges: the HLL union of ``event_count`` and the max of
+        ``last_event_time``. An additive custom ``STATE_AGGS`` entry (a
+        sum or count) would double-count on replay."""
         # The batch aggregate feeds two writes (states + changelog MV
         # analog) plus the finalize merge; persist so the event scan +
         # HLL build runs once. The STATES APPEND is the materializing

@@ -94,6 +94,11 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # the engine's table format (sources/writers.py): 8-byte INT64
+        # timestamps instead of the 12-byte INT96 default, zstd instead
+        # of snappy. Both are read from the session conf at write time.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # catalog-table data (bucketed tables, scratch databases) defaults

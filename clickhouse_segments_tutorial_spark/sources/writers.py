@@ -15,6 +15,27 @@ ClickHouse table engines, re-expressed as parquet layout + explicit jobs.
 At 100 TB these helpers are the difference between a scan and a prune: daily
 partitions + sort-on-write give the same skip behavior as ClickHouse's sparse
 primary index, with zero custom code at read time.
+
+Storage format — one for every table written here (states, changelog,
+assignments, and every ``rewrite_table`` compaction):
+
+- timestamps as INT64 ``TIMESTAMP(MICROS)``, not Spark's default 12-byte
+  INT96 (``spark.sql.parquet.outputTimestampType`` in session.py);
+- the zstd codec, not snappy (``spark.sql.parquet.compression.codec`` in
+  session.py);
+- v2 data pages (:data:`WRITE_OPTIONS`), so a column that falls back from
+  dictionary encoding gets a typed encoding instead of PLAIN: the cluster
+  key ``user_id``, sorted within each file, becomes DELTA_BINARY_PACKED
+  (small deltas of a sorted run), booleans become RLE.
+
+Why: the cascade's point is small mergeable per-user state (an HLL sketch
+plus a max) instead of raw history, and with the defaults most of its bytes
+were encoding overhead — the INT96 ``last_event_time`` and a PLAIN sorted
+``user_id`` — not sketch content. The two session confs are read from the
+session at write time; the writer version is a Hadoop-level parquet setting
+that reaches a running session only as a per-write option (``spark.hadoop.*``
+confs are static). Readers need nothing: parquet files of either format
+mix freely in one table.
 """
 
 from __future__ import annotations
@@ -25,6 +46,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 PARTITION_COL = "part_yyyymmdd"
+# parquet-mr writer version: v2 data pages (DELTA_BINARY_PACKED / RLE
+# fallback encodings) — see the module docstring
+WRITE_OPTIONS = {"parquet.writer.version": "v2"}
 
 
 def append_clustered(
@@ -52,7 +76,9 @@ def append_clustered(
         writer_df = writer_df.repartition(
             F.col(PARTITION_COL), *[F.col(c) for c in cluster_by]
         ).sortWithinPartitions(PARTITION_COL, *cluster_by)
-        writer_df.write.mode("append").partitionBy(PARTITION_COL).parquet(path)
+        writer_df.write.options(**WRITE_OPTIONS).mode("append").partitionBy(
+            PARTITION_COL
+        ).parquet(path)
     else:
         # Size the write by DATA, not by the incoming partition count: a
         # micro-batch state frame arrives with one (tiny) partition per
@@ -67,7 +93,9 @@ def append_clustered(
         # prune the finalize semi-join. Table CONTENTS are unchanged (a
         # multiset of rows; every reader aggregates order-independently).
         writer_df = writer_df.hint("rebalance", *[F.col(c) for c in cluster_by])
-        writer_df.sortWithinPartitions(*cluster_by).write.mode("append").parquet(path)
+        writer_df.sortWithinPartitions(*cluster_by).write.options(
+            **WRITE_OPTIONS
+        ).mode("append").parquet(path)
 
 
 def recover_rewrite(path: str) -> bool:
@@ -111,7 +139,9 @@ def rewrite_table(
     tmp = path.rstrip("/") + ".rewrite.tmp"
     old = path.rstrip("/") + ".rewrite.old"
     shutil.rmtree(tmp, ignore_errors=True)
-    df.sortWithinPartitions(*cluster_by).write.mode("overwrite").parquet(tmp)
+    df.sortWithinPartitions(*cluster_by).write.options(**WRITE_OPTIONS).mode(
+        "overwrite"
+    ).parquet(tmp)
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)
     os.rename(tmp, path)

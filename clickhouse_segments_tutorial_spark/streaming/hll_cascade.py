@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..operators.hll_state import hll_merge, hll_merge_estimate, hll_partial_state
 from ..operators.latest_wins import latest_value
+from ..sources.catalog import read_parquet
 from ..sources.writers import append_clustered, recover_rewrite, rewrite_table
 from .stream_segment import StreamingSegmenter
 
@@ -85,7 +86,7 @@ class HllCascadeStreamingSegmenter(StreamingSegmenter):
                 # stage 2 — changelog: the inserted block's users
                 changed = state_rows.select("user_id")
                 # stage 3 — finalize only changed users across ALL batches
-                states = self.spark.read.parquet(self.states_path)
+                states = read_parquet(self.spark, self.states_path)
                 finalized = (
                     states.join(F.broadcast(changed), "user_id", "left_semi")
                     .groupBy("user_id")
@@ -122,7 +123,7 @@ class HllCascadeStreamingSegmenter(StreamingSegmenter):
         super()._maintain(batch_id)
         if self.compact_every is None or (batch_id + 1) % self.compact_every:
             return
-        states = self.spark.read.parquet(self.states_path)
+        states = read_parquet(self.spark, self.states_path)
         merged = states.groupBy("user_id").agg(
             hll_merge("event_count").alias("event_count"),
             F.max("last_event_time").alias("last_event_time"),
@@ -135,9 +136,9 @@ class HllCascadeStreamingSegmenter(StreamingSegmenter):
         last_event_time for latest_value=true rows (second truncation per
         the golden assertion at :191)."""
         recover_rewrite(self.assignments_path)
-        if not os.path.exists(self.assignments_path):
+        assignments = read_parquet(self.spark, self.assignments_path)
+        if assignments is None:
             raise RuntimeError("no batches processed yet")
-        assignments = self.spark.read.parquet(self.assignments_path)
         return (
             assignments.groupBy("user_id")
             .agg(

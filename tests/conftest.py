@@ -44,6 +44,8 @@ SLOW_FILES = {
 # bit-identity pins for the scale-adaptive local trainer gates
 FAST_EXCEPTIONS = {
     "test_local_trainer_equals_distributed",
+    # driver-side literal guard: no Spark job, milliseconds
+    "test_adc_literal_rejects_non_finite_entries",
 }
 
 

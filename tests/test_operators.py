@@ -1177,6 +1177,27 @@ def test_pq_codebooks_reject_indivisible_m(spark, sf_oracle):
         pq_codebooks(emb, m=7, k_codes=8, portable=False)
 
 
+def test_adc_literal_rejects_non_finite_entries(spark):
+    """A NaN/inf codebook or probe entry must fail with a clear
+    ValueError at build time, not emit ``nanD``/``infD`` into the SQL
+    literal and die in the parser."""
+    from clickhouse_segments_tutorial_spark.operators.pq import (
+        _dec_array_lit,
+        pq_adc_scores,
+    )
+
+    codes = spark.createDataFrame([(0, [0])], "vec_id long, pq_codes array<int>")
+    books = [[[1.0, 0.0], [0.0, 1.0]]]
+    with pytest.raises(ValueError, match="non-finite codebook or probe entry"):
+        pq_adc_scores(codes, books, [float("nan"), 1.0])
+    with pytest.raises(ValueError, match="non-finite codebook or probe entry"):
+        pq_adc_scores(codes, [[[float("inf"), 0.0], [0.0, 1.0]]], [1.0, 1.0])
+    with pytest.raises(ValueError, match="non-finite"):
+        _dec_array_lit([0.5, float("-inf")])
+    # finite tables still build and score
+    assert [r.adc_score for r in pq_adc_scores(codes, books, [2.0, 3.0]).collect()] == [2.0]
+
+
 def test_pq_encode_partitioning_invariant(spark, sf_oracle):
     """Code assignment is per-vector independent and its tie-break fully
     specified (argmin round-6 d2, lowest code index), so the codes must
